@@ -26,13 +26,11 @@ Design — blocked-bloom, division-free:
   partial bit_or means each task emits at most ``m_words`` rows no
   matter how many keys it saw — the exchange is bounded by the filter
   size, not the corpus;
-* **probe** (default ``strategy='map'``) folds the whole filter into
-  ONE broadcast map row and evaluates all k bit-tests as a per-row
-  native expression: zero shuffle, zero Python on the probe side. A
-  62-bit-word filter of 2^20 words ≈ 8 MiB — comfortably broadcast-able
-  (that's ~10^7 keys at 1% FP). ``strategy='join'`` keeps the filter as
-  a relation (explode k probe rows, left join, bool_and) for filters
-  too big to broadcast.
+* **probe** folds the whole filter into ONE broadcast map row and
+  evaluates all k bit-tests as a per-row native expression: zero
+  shuffle, zero Python on the probe side. A 62-bit-word filter of 2^20
+  words ≈ 8 MiB — comfortably broadcast-able (that's ~10^7 keys at 1%
+  FP).
 
 False positives are deterministic (same hashes → same collisions), so
 the oracle matches them bit for bit; false negatives are impossible.
@@ -97,56 +95,32 @@ def bloom_probe(
     m_words: int = 1024,
     k: int = 4,
     seed: int = 1,
-    strategy: str = "map",
 ) -> DataFrame:
     """``(id, maybe_present)`` — True iff all k probed bits are set
     (possible false positive, never a false negative). ``m_words`` /
     ``k`` / ``seed`` must match the build call.
 
-    ``strategy='map'`` (default): the filter collapses to ONE broadcast
-    map row; the probe is a pure per-row expression — no exchange
-    touches the probe side at all. ``strategy='join'``: explode k probe
-    rows per key and left-join the filter relation on ``word_ix`` —
-    for filters past broadcast size (the join key is an 8-byte word
-    index; the probe side shuffles k rows of ~24 bytes per key)."""
+    The filter collapses to ONE broadcast map row; the probe is a pure
+    per-row expression — no exchange touches the probe side at all."""
     key = F.coalesce(F.col(key_col), F.lit(""))
-    probes = _probe_cols(key, k, m_words, seed)
-    if strategy == "map":
-        bloom_map = bloom.groupBy().agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("word_ix", "word"))
-            ).alias("_bloom")
-        )
-        hit = None
-        for w, mask in probes:
-            one = (
-                F.coalesce(
-                    F.try_element_at(F.col("_bloom"), w).bitwiseAND(mask)
-                    == mask,
-                    F.lit(False),
-                )
-            )
-            hit = one if hit is None else (hit & one)
-        return (
-            df.crossJoin(F.broadcast(bloom_map))
-            .select(F.col(id_col).alias("id"), hit.alias("maybe_present"))
-        )
-    if strategy != "join":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    entries = F.array(
-        *[F.struct(w.alias("word_ix"), m.alias("mask")) for w, m in probes]
+    bloom_map = bloom.groupBy().agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("word_ix", "word"))
+        ).alias("_bloom")
     )
-    exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(entries).alias("_e")
-    ).select("id", F.col("_e.word_ix").alias("word_ix"), F.col("_e.mask").alias("mask"))
-    joined = exploded.join(bloom, "word_ix", "left")
-    return joined.groupBy("id").agg(
-        F.bool_and(
+    hit = None
+    for w, mask in _probe_cols(key, k, m_words, seed):
+        one = (
             F.coalesce(
-                F.col("word").bitwiseAND(F.col("mask")) == F.col("mask"),
+                F.try_element_at(F.col("_bloom"), w).bitwiseAND(mask)
+                == mask,
                 F.lit(False),
             )
-        ).alias("maybe_present")
+        )
+        hit = one if hit is None else (hit & one)
+    return (
+        df.crossJoin(F.broadcast(bloom_map))
+        .select(F.col(id_col).alias("id"), hit.alias("maybe_present"))
     )
 
 

@@ -163,7 +163,9 @@ QUANT_SCALE = 1_000_000  # embedding quantization for exact integer sketches
 
 
 def _let(expr: F.Column, fn) -> F.Column:
-    # single-evaluation binding (see textstats._let)
+    # single-evaluation binding: transform over a 1-element array evaluates
+    # expr once, and unlike a projected alias CollapseProject cannot inline
+    # it per reference
     return F.get(F.transform(F.array(expr), fn), 0)
 
 

@@ -71,20 +71,10 @@ def ensure_min_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
     against ``spark.sql.files.maxPartitionBytes`` (Spark packs splits to
     that size); non-file and non-local sources skip the repartition —
     at scale they are many-partition anyway, and guessing wrong merely
-    costs parallelism on a toy input, never a shuffle on a big one.
-
-    Escape hatch: set ``spark.ocrspark.ensureMinParallelism=false``
-    (session conf) to disable the gate wholesale.
-    """
+    costs parallelism on a toy input, never a shuffle on a big one."""
     if df.isStreaming:  # partitioning is per-micro-batch; no-op
         return df
-    spark = df.sparkSession
-    if (
-        str(spark.conf.get("spark.ocrspark.ensureMinParallelism", "true")).lower()
-        == "false"
-    ):  # documented escape hatch: disable the gate wholesale
-        return df
-    target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     threshold = max(1, int(target * min_factor))
     if scan_partitions_below(df, threshold):
         return df.repartition(target)

@@ -55,34 +55,33 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataF
 def _spread_documents(
     df: DataFrame, cfg: PipelineConfig, gate_df: DataFrame | None = None
 ) -> DataFrame:
-    """Scale-adaptive document spread (``cfg.salted_spread``): the
-    per-document correction stage is embarrassingly parallel, so the
-    salted repartition buys exactly one thing — parallelism when the
-    input is under-split (a toy table's single row-group would serialize
-    the Python kernel on one core). A splittable corpus scan is already
-    size-uniform at ``maxPartitionBytes`` and mega-documents route to
-    the staged path, so ``auto`` skips the full-corpus shuffle there
-    (guide §2.4: remove shuffles outright; measured ~27% of pipeline
-    wall at the 1.1 GB bench tier, byte-identical output) and applies
-    the salted spread only below the :func:`scan_partitions_below`
-    threshold — the same gate ensure_min_parallelism uses.
+    """Scale-adaptive document spread: the per-document correction stage
+    is embarrassingly parallel, so the salted repartition buys exactly
+    one thing — parallelism when the input is under-split (a toy table's
+    single row-group would serialize the Python kernel on one core). A
+    splittable corpus scan is already size-uniform at
+    ``maxPartitionBytes`` and mega-documents route to the staged path,
+    so the full-corpus shuffle is skipped there (guide §2.4: remove
+    shuffles outright; measured ~27% of pipeline wall at the 1.1 GB
+    bench tier, byte-identical output) and the salted spread applies
+    only below the :func:`scan_partitions_below` threshold — the same
+    gate ensure_min_parallelism uses. The STAGED chunk path always
+    salts on (url, chunk_ix): spreading a mega-document's chunks is the
+    whole point there, and chunking changes row sizes so scan
+    uniformity says nothing about it.
 
     ``gate_df``: the plan to JUDGE when ``df`` itself cannot be (the
     auto strategy hands branches of a persisted relation, and
     ``inputFiles()`` on an InMemoryRelation is empty — the gate would
     conservatively skip the spread a toy input needs); pass the
     pre-persist source so the file-size estimate still sees the scan."""
-    mode = getattr(cfg, "salted_spread", "always")
-    if mode == "never":
-        return df
-    if mode == "auto":
-        from llm_aided_ocr_spark.operators.util import scan_partitions_below
+    from llm_aided_ocr_spark.operators.util import scan_partitions_below
 
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if not scan_partitions_below(
-            gate_df if gate_df is not None else df, max(1, target // 2)
-        ):
-            return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if not scan_partitions_below(
+        gate_df if gate_df is not None else df, max(1, target // 2)
+    ):
+        return df
     return salted_repartition(df, cfg)
 
 

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.boilerplate import (
-    dup_line_hashes,
     line_dedup,
     line_dedup_stats,
 )
@@ -40,43 +39,30 @@ def chrome_corpus(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_dup_line_hashes_counts_distinct_docs(spark, chrome_corpus):
-    # header appears in 7 docs, footer in 7; with min_doc_freq=7 both
-    # qualify; at 8 neither does
-    assert dup_line_hashes(chrome_corpus, min_doc_freq=7).count() == 2
-    assert dup_line_hashes(chrome_corpus, min_doc_freq=8).count() == 0
-
-
 def test_dup_line_counting_is_per_document_distinct(spark):
     # one doc repeating a line 10 times contributes doc-frequency 1
     df = spark.createDataFrame(
         [(1, "\n".join(["same line"] * 10))], "doc_id bigint, text string"
     )
-    assert dup_line_hashes(df, min_doc_freq=2).count() == 0
+    out = {r.doc_id: r.text for r in line_dedup(df, min_doc_freq=2).collect()}
+    assert out == {1: "\n".join(["same line"] * 10)}
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "join"])
+@pytest.mark.parametrize("min_doc_freq", [5, 7])
 def test_line_dedup_strips_chrome_keeps_body_and_blanks(
-    spark, chrome_corpus, strategy
+    spark, chrome_corpus, min_doc_freq
 ):
+    # header and footer each occur in 7 documents, so both are frequent
+    # at 7; the blank line also occurs in 7 (docs 0-5 and the empty doc
+    # 91) but is never counted, so the body's blank line survives
     out = {
         r.doc_id: r.text
-        for r in line_dedup(
-            chrome_corpus, min_doc_freq=5, strategy=strategy
-        ).collect()
+        for r in line_dedup(chrome_corpus, min_doc_freq=min_doc_freq).collect()
     }
     assert out[0] == "unique body 0 alpha\n\nunique body 0 beta"
     assert out[90] == ""  # chrome-only page -> empty, not dropped
     assert out[91] == ""
     assert len(out) == 8
-
-
-def test_line_dedup_strategies_agree(spark, chrome_corpus):
-    a = line_dedup(chrome_corpus, min_doc_freq=5, strategy="broadcast")
-    b = line_dedup(chrome_corpus, min_doc_freq=5, strategy="join")
-    assert sorted((r.doc_id, r.text) for r in a.collect()) == sorted(
-        (r.doc_id, r.text) for r in b.collect()
-    )
 
 
 def test_line_dedup_trim_insensitive_but_preserves_original_bytes(spark):
@@ -90,9 +76,11 @@ def test_line_dedup_trim_insensitive_but_preserves_original_bytes(spark):
 
 
 def test_line_dedup_no_frequent_lines_is_identity(spark, chrome_corpus):
-    out = line_dedup(chrome_corpus, min_doc_freq=100)
+    # at 8 neither chrome line (7 documents each) is frequent
     orig = {r.doc_id: r.text for r in chrome_corpus.collect()}
-    assert {r.doc_id: r.text for r in out.collect()} == orig
+    for min_doc_freq in (8, 100):
+        out = line_dedup(chrome_corpus, min_doc_freq=min_doc_freq)
+        assert {r.doc_id: r.text for r in out.collect()} == orig
 
 
 def test_line_dedup_stats_md5_of_rebuilt_bytes(spark, chrome_corpus):
@@ -104,20 +92,6 @@ def test_line_dedup_stats_md5_of_rebuilt_bytes(spark, chrome_corpus):
     assert (r0.n_lines, r0.n_kept, r0.clean_len) == (5, 3, len(want))
     assert r0.clean_md5 == hashlib.md5(want.encode()).hexdigest()
     assert stats[91].n_kept == 0 and stats[91].clean_len == 0
-
-
-def test_line_dedup_broadcast_rebuild_adds_no_per_line_exchange(spark, chrome_corpus):
-    """The default-strategy plan must contain exactly the counting
-    aggregation's exchanges — no per-line shuffle for the rebuild side."""
-    plan = (
-        line_dedup(chrome_corpus, min_doc_freq=5, strategy="broadcast")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # counting: one hash-partitioned exchange (partial->final count);
-    # rebuild: only the broadcast of the 1-row array
-    assert plan.count("Exchange hashpartitioning") <= 1
 
 
 def test_line_dedup_portable_hash_family(spark, chrome_corpus):
@@ -279,15 +253,38 @@ def test_dup_span_profile_stats_only_mode(spark, span_corpus):
     assert cols == ["id", "n_grams", "n_dup", "dup_frac"]
 
 
+def _dup_span_reference(rows, n):
+    """Plain-Python ExactSubstr profile: ``{id: (n_grams, n_dup,
+    stripped)}`` over the ``[a-z0-9]+`` token stream, a gram duplicated
+    iff it occurs >= 2 times corpus-wide, token j stripped iff some
+    duplicated gram starts in ``[j-n+1, j]``."""
+    import re
+    from collections import Counter
+
+    toks = {i: re.findall(r"[a-z0-9]+", (t or "").lower()) for i, t in rows}
+    grams = {
+        i: [tuple(ts[p : p + n]) for p in range(len(ts) - n + 1)]
+        for i, ts in toks.items()
+    }
+    cnt = Counter(g for gs in grams.values() for g in gs)
+    out = {}
+    for i, ts in toks.items():
+        starts = [p for p, g in enumerate(grams[i]) if cnt[g] >= 2]
+        covered = {j for p in starts for j in range(p, p + n)}
+        kept = [t for j, t in enumerate(ts) if j not in covered]
+        out[i] = (len(grams[i]), len(starts), " ".join(kept))
+    return out
+
+
 def test_dup_span_strip_impls_agree(spark):
-    """The Arrow difference-array strip (default) and the interpreted
-    merged-interval HOF strip must be byte-identical on a randomized
-    corpus engineered to hit every coverage shape: clean docs, full
-    coverage, adjacent/overlapping spans, spans touching both document
-    edges, and sub-n docs."""
+    """The merged-interval HOF strip must equal a plain-Python coverage
+    reference on a randomized corpus engineered to hit every coverage
+    shape: clean docs, full coverage, adjacent/overlapping spans, spans
+    touching both document edges, and sub-n docs."""
     import random
 
     from llm_aided_ocr_spark.operators.dedup import dup_span_profile
+    from llm_aided_ocr_spark.operators.util import release_pinned
 
     rng = random.Random(7)
     shared_runs = [
@@ -307,13 +304,12 @@ def test_dup_span_strip_impls_agree(spark):
         rows.append((i, " ".join(parts)))
     rows += [(100, "tiny"), (101, ""), (102, None)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    key = lambda out: sorted(
-        (r.id, r.n_grams, r.n_dup, r.stripped) for r in out.collect()
-    )
-    a = key(dup_span_profile(df, n=6, strip_impl="arrow"))
-    b = key(dup_span_profile(df, n=6, strip_impl="native"))
-    assert a == b
-    assert any(r[2] > 0 and r[3] != "" for r in a)  # partial coverage hit
+    out = dup_span_profile(df, n=6)
+    got = {r.id: (r.n_grams, r.n_dup, r.stripped) for r in out.collect()}
+    release_pinned(out, blocking=True)
+    assert got == _dup_span_reference(rows, 6)
+    assert any(v[1] > 0 and v[2] != "" for v in got.values())  # partial hit
+    assert any(v[1] > 0 and v[2] == "" for v in got.values())  # full cover
 
 
 def test_gram_hashes_arrow_matches_native_expression(spark):
@@ -356,19 +352,6 @@ def test_gram_hashes_arrow_matches_native_expression(spark):
             assert arrow == native, (family, n)
 
 
-def test_dup_span_profile_impl_parity(spark, span_corpus):
-    from llm_aided_ocr_spark.operators.dedup import dup_span_profile
-    from llm_aided_ocr_spark.operators.util import release_pinned
-
-    a = dup_span_profile(span_corpus, n=6, impl="arrow")
-    b = dup_span_profile(span_corpus, n=6, impl="native")
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    release_pinned(a, blocking=True)
-    release_pinned(b, blocking=True)
-    assert ra == rb
-
-
 def test_corpus_rejoins_never_broadcast(spark, span_corpus):
     """The O(corpus) per-document rebuild relations (dup positions, kept
     line/paragraph positions, per-doc scores) must reach their corpus
@@ -388,7 +371,7 @@ def test_corpus_rejoins_never_broadcast(spark, span_corpus):
     for out in (
         paragraph_dedup_stats(corpus),
         dup_span_profile(corpus, n=6),
-        line_dedup(corpus, min_doc_freq=2, strategy="join"),
+        line_dedup(corpus, min_doc_freq=2),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan, plan

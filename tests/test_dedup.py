@@ -806,6 +806,25 @@ def test_cluster_keepers_string_ids(spark):
            for r in cluster_keepers(clusters, quality).collect()}
     assert got == {"c1": ("u/b", 3, 50), "c2": ("u/x", 2, 5)}
 
+    # NULL cluster ids form one group on both paths
+    pairs = [(1, 10), (2, 10), (3, None), (4, None)]
+    scores = [(1, 5), (2, 7), (3, 8), (4, 9)]
+    want = {(10, 2, 2, 7), (None, 4, 2, 9)}
+    num = cluster_keepers(
+        spark.createDataFrame(pairs, "id bigint, cluster_id bigint"),
+        spark.createDataFrame(scores, "id bigint, quality bigint"),
+    )
+    assert set(map(tuple, num.collect())) == want
+    txt = cluster_keepers(
+        spark.createDataFrame(
+            [(str(i), c) for i, c in pairs], "id string, cluster_id bigint"
+        ),
+        spark.createDataFrame(
+            [(str(i), q) for i, q in scores], "id string, quality bigint"
+        ),
+    )
+    assert {(c, int(k), n, q) for c, k, n, q in txt.collect()} == want
+
 
 def test_cluster_keepers_string_ids_all_null_quality(spark):
     # all-NULL quality keeps the min-id member (null-safe equality),

@@ -588,13 +588,12 @@ def test_top_ngrams_uses_take_ordered_not_global_sort(spark):
 
 
 def test_salted_spread_gate(spark):
-    """salted_spread='auto' (round 6): the document-branch salted
-    repartition fires for an under-split toy input (restoring kernel
-    parallelism) but is SKIPPED when the gate cannot prove the input
-    under-split — e.g. a branch of a persisted relation judged without
-    a gate_df — because a size-uniform corpus scan needs no extra
-    full-corpus shuffle (guide §2.4). Values never depend on the
-    choice; this pins the plan shape."""
+    """The document-branch salted repartition fires for an under-split
+    toy input (restoring kernel parallelism) but is SKIPPED when the
+    gate cannot prove the input under-split — e.g. a branch of a
+    persisted relation judged without a gate_df — because a size-uniform
+    corpus scan needs no extra full-corpus shuffle (guide §2.4). Values
+    never depend on the choice; this pins the plan shape."""
     from pyspark import StorageLevel
 
     from llm_aided_ocr_spark.config import PipelineConfig
@@ -606,7 +605,6 @@ def test_salted_spread_gate(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).select(F.col("doc_id").cast("string").alias("url"), "text")
     cfg = PipelineConfig()
-    assert cfg.salted_spread == "auto"
 
     # toy parquet input: under-split -> the salted repartition applies
     spread = _spread_documents(pages, cfg)
@@ -623,11 +621,3 @@ def test_salted_spread_gate(spark):
         assert "RepartitionByExpression" in spread2._jdf.queryExecution().logical().toString()
     finally:
         cached.unpersist()
-
-    # explicit modes
-    assert _spread_documents(pages, PipelineConfig(salted_spread="never")) is pages
-    always = _spread_documents(
-        pages.persist(StorageLevel.MEMORY_AND_DISK),
-        PipelineConfig(salted_spread="always"),
-    )
-    assert "RepartitionByExpression" in always._jdf.queryExecution().logical().toString()

@@ -184,11 +184,3 @@ def test_plan_node_walk_compat(spark, tmp_path):
     assert not names & {"Join", "Window", "Aggregate", "Sort"}
     out = ensure_min_parallelism(scan.select("Join", "Window"))
     assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism // 2
-
-    # the documented escape hatch disables the gate wholesale
-    spark.conf.set("spark.ocrspark.ensureMinParallelism", "false")
-    try:
-        off = ensure_min_parallelism(scan.select("Join"))
-        assert off.rdd.getNumPartitions() == scan.select("Join").rdd.getNumPartitions()
-    finally:
-        spark.conf.unset("spark.ocrspark.ensureMinParallelism")

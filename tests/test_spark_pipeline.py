@@ -65,6 +65,16 @@ def test_auto_routes_mega_docs(spark):
     f = {r["url"]: r["corrected_text"] for r in fused}
     assert a == f
     assert len(a) == 12
+    # Arrow large var types: the fused pass hands the input url array
+    # (then large_string) straight back beside string columns; both
+    # routes must still return the same rows
+    spark.conf.set("spark.sql.execution.arrow.useLargeVarTypes", "true")
+    try:
+        for strategy in ("fused", "auto"):
+            got = run_pipeline(df, cfg, strategy=strategy).collect()
+            assert {r["url"]: r["corrected_text"] for r in got} == f, strategy
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.useLargeVarTypes")
 
 
 def test_html_extraction_path(spark, pages):

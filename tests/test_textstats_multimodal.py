@@ -113,16 +113,6 @@ def test_fingerprints(spark, docs):
     # determinism across partitioning
     rows2 = {r["doc_id"]: r.asDict() for r in fingerprints(docs.repartition(5)).collect()}
     assert rows == rows2
-    # impl parity: the native expression and the Arrow pass produce the
-    # same fingerprint SETS (array order is unspecified)
-    native = {
-        r["doc_id"]: r.asDict()
-        for r in fingerprints(docs, impl="native").collect()
-    }
-    for did in rows:
-        assert native[did]["content_hash"] == rows[did]["content_hash"]
-        assert native[did]["n_grams"] == rows[did]["n_grams"]
-        assert sorted(native[did]["fps"]) == sorted(rows[did]["fps"]), did
 
 
 def test_fingerprint_matches_hot_fp_cap(spark):
@@ -707,10 +697,18 @@ def test_top_ngrams_counts_and_ties(spark):
 
 
 def test_gate_fused_matches_composed(spark):
-    """impl='fused' (one Arrow pass, zero joins) must equal
-    impl='composed' (the three standalone operators) row-for-row on a
-    corpus that exercises every metric family."""
-    from llm_aided_ocr_spark.operators.textstats import gopher_repetition_gate
+    """The gate's single Arrow pass must equal the composition of the
+    three standalone operators (``repetition_metrics``,
+    ``paragraph_repetition_metrics``, ``gopher_ngram_metrics``, rounded
+    HALF_UP to 6 dp and joined on id) row-for-row on a corpus that
+    exercises every metric family."""
+    from llm_aided_ocr_spark.operators.textstats import (
+        GOPHER_REPETITION_THRESHOLDS,
+        gopher_ngram_metrics,
+        gopher_repetition_gate,
+        paragraph_repetition_metrics,
+        repetition_metrics,
+    )
 
     clean = " ".join(f"word{i} item{i * 7 % 101}" for i in range(60))
     docs = [
@@ -722,13 +720,34 @@ def test_gate_fused_matches_composed(spark):
         (6, None),
     ]
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    fused = sorted(map(tuple, gopher_repetition_gate(df, impl="fused").collect()))
-    comp = sorted(map(tuple, gopher_repetition_gate(df, impl="composed").collect()))
-    assert fused == comp
-    import pytest
+    gate = gopher_repetition_gate(df)
+    cols = [c for c in gate.columns if c not in ("doc_id", "repetition_pass")]
 
-    with pytest.raises(ValueError):
-        gopher_repetition_gate(df, impl="nope")
+    lines = repetition_metrics(df).select(
+        "doc_id",
+        F.round("dup_line_frac", 6).alias("dup_line_frac"),
+        F.round("dup_line_char_frac", 6).alias("dup_line_char_frac"),
+        F.round("top_bigram_char_frac", 6).alias("top_2gram_char_frac"),
+    )
+    paras = paragraph_repetition_metrics(df).select(
+        "doc_id",
+        F.round("dup_para_frac", 6).alias("dup_para_frac"),
+        F.round("dup_para_char_frac", 6).alias("dup_para_char_frac"),
+    )
+    grams = gopher_ngram_metrics(df, top_ns=(3, 4))
+    grams = grams.select(
+        "doc_id", *[F.round(c, 6).alias(c) for c in grams.columns if c != "doc_id"]
+    )
+    comp = sorted(
+        (
+            r["doc_id"],
+            *[r[c] for c in cols],
+            all(r[c] <= GOPHER_REPETITION_THRESHOLDS[c] for c in cols),
+        )
+        for r in lines.join(paras, "doc_id").join(grams, "doc_id").collect()
+    )
+    assert len(comp) == 6
+    assert sorted(map(tuple, gate.collect())) == comp
 
 
 def test_charset_signals(spark):

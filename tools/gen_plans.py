@@ -414,8 +414,9 @@ def main() -> None:
     sections.append((
         "gopher_repetition_gate — fused: one Arrow pass, no joins",
         "all 13 repetition fractions come out of a single MapInPandas "
-        "over the corpus (composed impl pays three passes + two joins; "
-        "parity-tested equal). The threshold chain is a native "
+        "over the corpus (composing the three standalone operators "
+        "would pay three passes + two joins; a test checks the values "
+        "equal). The threshold chain is a native "
         "comparison conjunction above it.",
         plan_of(q["gopher_repetition_gate"](spark, SF)),
     ))
