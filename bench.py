@@ -89,9 +89,9 @@ def bench_pipeline(spark, iters: int = 3) -> dict:
         t0 = time.time()
         _noop_sink(result)
         best = min(best, time.time() - t0)
-    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
+    from llm_aided_ocr_spark.operators.util import release_pinned
 
-    release_pipeline_cache(result)
+    release_pinned()
     return {
         "seconds": round(best, 3),
         "n_docs": n_docs,
@@ -113,7 +113,7 @@ def bench_queries(spark, sf_dir: str) -> dict:
         t0 = time.time()
         _noop_sink(df)
         out[name] = round(time.time() - t0, 3)
-        # release each query's pinned caches so the full sweep doesn't
+        # release each query's caches so the full sweep doesn't
         # stack corpus-sized persisted relations in one session
         release_pinned(df)
     return out
@@ -918,10 +918,6 @@ def bench_stress(spark, scale_ratio: int = 10) -> dict:
             _noop_sink(df)
             dt = time.time() - t0
             release_pinned(df)
-            if name in ("curate", "warc_curate"):
-                from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
-
-                release_pipeline_cache(df)
             rec = report["ops"].setdefault(name, {})
             rec[f"sec_{tag}"] = round(dt, 2)
             rec[f"mb_per_sec_{tag}"] = round(mb / dt, 1)

@@ -301,7 +301,7 @@ def main(argv=None) -> int:
             store=store,
         )
         curated.write.mode("overwrite").parquet(args.output + "/curated_docs")
-        release_pinned(curated)
+        release_pinned()
         back = spark.read.parquet(args.output + "/curated_docs")
         for r in curation_report(back).orderBy("split").collect():
             print(
@@ -359,9 +359,9 @@ def main(argv=None) -> int:
     result.write.mode("overwrite").parquet(args.output + "/corrected_docs")
 
     # the terminal action is done — release the auto strategy's routed cache
-    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
+    from llm_aided_ocr_spark.operators.util import release_pinned
 
-    release_pipeline_cache(result)
+    release_pinned()
 
     if not args.no_raw:
         # two-sink contract: the reference always writes the raw OCR text

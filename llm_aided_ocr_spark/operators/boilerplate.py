@@ -64,7 +64,7 @@ def line_dedup(
     join is pinned off broadcast (``corpus_scaled``)."""
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import let_, pin
+    from llm_aided_ocr_spark.operators.util import cache, let_
 
     out_col = out_col or text_col
     lines = _lines_col(text_col)
@@ -76,10 +76,13 @@ def line_dedup(
     # (guide §2.4/§1.2). Equivalence of the dup side: a line's hash
     # is of its TRIMMED form, so `hash != hash('')` selects exactly
     # the trimmed-non-blank lines.
-    hrel = df.select(
-        F.col(id_col).alias("_ld_id"),
-        F.transform(lines, lambda l: _line_hash(l, hash_family)).alias("_lh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    hrel = cache(
+        df.select(
+            F.col(id_col).alias("_ld_id"),
+            F.transform(lines, lambda l: _line_hash(l, hash_family)).alias("_lh"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     dup = (
         hrel.select(
             F.explode(
@@ -113,11 +116,10 @@ def line_dedup(
             F.transform(kept_arr, lambda i: F.element_at(ls, i + 1)), "\n"
         ),
     )
-    return pin(
+    return (
         df.join(corpus_scaled(kept_pos), df[id_col] == kept_pos["_ld_id"], "left")
         .withColumn(out_col, rebuilt)
-        .drop("_ld_id", "_kept_pos"),
-        hrel,
+        .drop("_ld_id", "_kept_pos")
     )
 
 
@@ -132,13 +134,11 @@ def line_dedup_stats(
     :func:`line_dedup`: per-document line counts before/after plus the
     length and md5 of the cleaned text (md5 is engine-portable, so the
     driver oracle verifies the rebuilt BYTES, not just counts)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     cleaned = line_dedup(
         df, text_col=text_col, id_col=id_col, min_doc_freq=min_doc_freq,
         hash_family=hash_family, out_col="_clean",
     )
-    return carry_pins(cleaned, cleaned.select(
+    return cleaned.select(
         F.col(id_col).alias("id"),
         F.size(_lines_col(text_col)).alias("n_lines"),
         F.size(F.split(F.col("_clean"), "\n")).alias("n_kept_raw"),
@@ -148,7 +148,7 @@ def line_dedup_stats(
         # split('') yields [''] — an all-boilerplate doc has 0 kept lines
         "n_kept",
         F.when(F.col("clean_len") == 0, F.lit(0)).otherwise(F.col("n_kept_raw")),
-    ).drop("n_kept_raw"))
+    ).drop("n_kept_raw")
 
 
 # ---------------------------------------------------------------------------

@@ -171,7 +171,7 @@ def bpe_learn(
     ``local_vocab_cap`` rows — a BOUNDED collect by construction
     (2M words ≈ tens of MB), never an O(corpus) one."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import release_local_checkpoint
+    from llm_aided_ocr_spark.operators.util import cache_scope, checkpoint
 
     if strategy not in ("auto", "local", "distributed"):
         raise ValueError(f"unknown strategy: {strategy!r}")
@@ -185,9 +185,9 @@ def bpe_learn(
     if min_word_freq > 1:
         words = words.filter(F.col("n") >= min_word_freq)
 
-    if strategy != "distributed":
-        word_table = words.localCheckpoint(eager=True)
-        try:
+    with cache_scope() as scope:
+        if strategy != "distributed":
+            word_table = checkpoint(words)
             if (
                 strategy == "local"
                 or word_table.count() <= local_vocab_cap
@@ -196,52 +196,48 @@ def bpe_learn(
                 return _bpe_learn_local(
                     [(r["w"], r["n"]) for r in rows], num_merges
                 )
-        finally:
-            release_local_checkpoint(word_table)
+            scope.release(word_table)
 
-    vocab = words.select(
-        "n", F.split(F.col("w"), "").alias("syms")
-    ).localCheckpoint(eager=True)
+        vocab = checkpoint(words.select("n", F.split(F.col("w"), "").alias("syms")))
 
-    merges: List[Tuple[int, str, str, int]] = []
-    for t in range(num_merges):
-        sz = F.size("syms")
-        pairs = (
-            vocab.filter(sz >= 2)
-            .select(
-                "n",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice("syms", 1, sz - 1).alias("a"),
-                        F.slice("syms", 2, sz - 1).alias("b"),
-                    )
-                ).alias("p"),
+        merges: List[Tuple[int, str, str, int]] = []
+        for t in range(num_merges):
+            sz = F.size("syms")
+            pairs = (
+                vocab.filter(sz >= 2)
+                .select(
+                    "n",
+                    F.explode(
+                        F.arrays_zip(
+                            F.slice("syms", 1, sz - 1).alias("a"),
+                            F.slice("syms", 2, sz - 1).alias("b"),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("n").alias("freq"))
             )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("n").alias("freq"))
-        )
-        top = pairs.orderBy(
-            F.desc("freq"), F.asc("a"), F.asc("b")
-        ).limit(1).collect()
-        if not top:
-            break
-        a, b, freq = top[0]["a"], top[0]["b"], int(top[0]["freq"])
-        merges.append((t, a, b, freq))
+            top = pairs.orderBy(
+                F.desc("freq"), F.asc("a"), F.asc("b")
+            ).limit(1).collect()
+            if not top:
+                break
+            a, b, freq = top[0]["a"], top[0]["b"], int(top[0]["freq"])
+            merges.append((t, a, b, freq))
 
-        def _apply(batches, a=a, b=b):
-            for pdf in batches:
-                pdf["syms"] = [
-                    _merge_word(list(s), a, b) for s in pdf["syms"]
-                ]
-                yield pdf
+            def _apply(batches, a=a, b=b):
+                for pdf in batches:
+                    pdf["syms"] = [
+                        _merge_word(list(s), a, b) for s in pdf["syms"]
+                    ]
+                    yield pdf
 
-        new_vocab = vocab.mapInPandas(
-            _apply, schema="n bigint, syms array<string>"
-        ).localCheckpoint(eager=True)
-        release_local_checkpoint(vocab)
-        vocab = new_vocab
-    release_local_checkpoint(vocab)
-    return merges
+            new_vocab = checkpoint(
+                vocab.mapInPandas(_apply, schema="n bigint, syms array<string>")
+            )
+            scope.release(vocab)
+            vocab = new_vocab
+        return merges
 
 
 def bpe_merges_df(
@@ -293,9 +289,9 @@ def bpe_token_counts(
     whitespace estimate (tested in tests/test_bpe.py)."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
     from llm_aided_ocr_spark.operators.util import (
+        cache,
         corpus_scaled,
         ensure_min_parallelism,
-        pin,
     )
 
     pairs = [
@@ -304,12 +300,12 @@ def bpe_token_counts(
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"), _words_col(text_col).alias("ws")
     )
-    occ = (
+    # feeds the vocab distinct AND the join side
+    occ = cache(
         base.select("id", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
         .groupBy("id", "w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .cache()  # feeds the vocab distinct AND the join side; pinned
     )
     vocab = occ.select("w").distinct()
 
@@ -337,13 +333,10 @@ def bpe_token_counts(
         )
     )
     all_ids = df.select(F.col(id_col).alias("id"))
-    return pin(
-        all_ids.join(corpus_scaled(per_doc), "id", "left").select(
-            "id",
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
-        ),
-        occ,
+    return all_ids.join(corpus_scaled(per_doc), "id", "left").select(
+        "id",
+        F.coalesce("n_words", F.lit(0)).alias("n_words"),
+        F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
     )
 
 
@@ -465,7 +458,7 @@ def bpe_fertility(
     joins back on ``w``. Ratios are single IEEE divisions of exact
     integer sums — engine-exact."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism, pin
+    from llm_aided_ocr_spark.operators.util import cache, ensure_min_parallelism
 
     pairs = [
         (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
@@ -474,12 +467,11 @@ def bpe_fertility(
         F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
         _words_col(text_col).alias("ws"),
     )
-    occ = (
+    occ = cache(
         base.select("lang", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .cache()
     )
     vocab = occ.select("w").distinct()
 
@@ -496,7 +488,7 @@ def bpe_fertility(
             yield pd.DataFrame({"w": pdf["w"], "n_syms": counts})
 
     vocab_tok = vocab.mapInPandas(_tokenize, schema="w string, n_syms int")
-    out = (
+    return (
         occ.join(vocab_tok, "w")
         .groupBy("lang")
         .agg(
@@ -520,4 +512,3 @@ def bpe_fertility(
             ).alias("chars_per_token"),
         )
     )
-    return pin(out, occ)

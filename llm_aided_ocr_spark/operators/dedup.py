@@ -100,7 +100,7 @@ def canonical_url_keepers(
 
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import cache
 
     # ``base`` is persisted: it feeds BOTH the keeper aggregation and
     # the join-back, and without the persist each consumer re-scanned
@@ -112,13 +112,16 @@ def canonical_url_keepers(
     # exchange sharing instead of a cache does not work here because
     # column pruning drops ``sz`` from the join-back side, making the
     # two exchange subtrees non-identical for ReuseExchange.
-    base = df.select(
-        F.col(id_col).alias("id"),
-        canonical_url_col(F.col(url_col)).alias("canon_url"),
-        F.octet_length(F.coalesce(F.col(text_col), F.lit("")))
-        .cast("bigint")
-        .alias("sz"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = cache(
+        df.select(
+            F.col(id_col).alias("id"),
+            canonical_url_col(F.col(url_col)).alias("canon_url"),
+            F.octet_length(F.coalesce(F.col(text_col), F.lit("")))
+            .cast("bigint")
+            .alias("sz"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     # min over (-sz, id): longest text first, then smallest id — one
     # struct-min aggregate instead of a row_number window (no per-group
     # sort buffer; plain map-side-combinable min)
@@ -130,12 +133,11 @@ def canonical_url_keepers(
         .agg(F.min(keep_key).alias("k"))
         .select("canon_url", F.col("k.id").alias("_keeper_id"))
     )
-    out = base.join(corpus_scaled(keepers), "canon_url").select(
+    return base.join(corpus_scaled(keepers), "canon_url").select(
         "id",
         "canon_url",
         (F.col("id") == F.col("_keeper_id")).alias("keep"),
     )
-    return pin(out, base)
 
 
 def exact_dup_groups(
@@ -406,7 +408,7 @@ def ngram_jaccard_pairs(
     re-checks ``id_a < id_b``, and verifies true Jaccard on exact
     arrays. The full shingle arrays cross an Exchange exactly once per
     SURVIVING candidate pair."""
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import cache
 
     t = float(threshold)
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
@@ -421,7 +423,7 @@ def ngram_jaccard_pairs(
         return F.ceil(F.lit(t) * sz - F.lit(1e-9))
 
     # inner join = semi-join (dfreq is keyed by shingle) + df attachment
-    per_doc = (
+    per_doc = cache(
         sh.join(dfreq, "shingle")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("s"))
@@ -438,7 +440,6 @@ def ngram_jaccard_pairs(
                 (F.col("sz") - _ceil_t(F.col("sz")) + F.lit(prefix_c)).cast("int"),
             ),
         )
-        .cache()
     )
     prefix = per_doc.select(
         "id", "h", F.explode(F.slice("arr", F.lit(1), F.col("plen"))).alias("shingle")
@@ -486,7 +487,7 @@ def ngram_jaccard_pairs(
         .drop("h_a", "h_b")
     )
     arrs = per_doc.select("id", "arr")
-    out = (
+    return (
         cand.join(arrs.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a")), "id_a")
         .join(arrs.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b")), "id_b")
         .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
@@ -497,7 +498,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return pin(out, per_doc)
 
 
 def containment_pairs(
@@ -541,14 +541,14 @@ def containment_pairs(
     pair keys (collisions only ADD candidates), and every survivor is
     verified with a native ``array_intersect`` over the full (capped)
     shingle arrays — the reported containment is exact."""
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import cache
 
     t = float(threshold)
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     if max_shingle_df is not None:
         dfreq = dfreq.filter(F.col("df") <= max_shingle_df)
-    per_doc = (
+    per_doc = cache(
         sh.join(dfreq, "shingle")
         .groupBy("id")
         .agg(
@@ -571,7 +571,6 @@ def containment_pairs(
                 ).cast("int"),
             ),
         )
-        .cache()
     )
     posts = per_doc.select("id", "h", F.explode("arr").alias("shingle"))
     prefix = per_doc.select(
@@ -591,7 +590,7 @@ def containment_pairs(
         .drop("_npref")
     )
     meta = per_doc.select("h", "id", "sz", "arr")
-    out = (
+    return (
         cand.join(
             meta.select(
                 F.col("h").alias("h_a"), F.col("id").alias("id_x"),
@@ -632,7 +631,6 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .distinct()
     )
-    return pin(out, per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -804,10 +802,12 @@ def minhash_dedup_pairs(
     # participate in no near-dup pairs by definition; byte-identical empties
     # are exact_dedup's job. (sig[0] == p identifies the sentinel: the
     # universal family maps real shingles into [0, p).)
-    sigs = minhash_signatures(
+    from llm_aided_ocr_spark.operators.util import cache
+
+    sigs = cache(minhash_signatures(
         df, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col,
         hash_family=hash_family,
-    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)).cache()
+    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)))
     cands = lsh_candidate_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band,
         max_bucket_size=max_bucket_size,
@@ -819,15 +819,12 @@ def minhash_dedup_pairs(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
     )
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("est_jaccard", agree / F.lit(num_perm))
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard"),
-        sigs,
+        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -898,9 +895,11 @@ def simhash_near_dup_pairs(
     pigeonhole), verified by exact hamming distance via bit_count(xor).
     ``max_bucket_size`` drops degenerate band buckets before the
     self-join (same rationale as :func:`lsh_candidate_pairs`)."""
-    sigs = simhash_signatures(
+    from llm_aided_ocr_spark.operators.util import cache
+
+    sigs = cache(simhash_signatures(
         df, text_col=text_col, id_col=id_col, hash_family=hash_family
-    ).cache()
+    ))
     band_bits = (SIMHASH_BITS if hash_family == "md5_52" else 64) // 4
     band_mask = (1 << band_bits) - 1
     bands = sigs.select(
@@ -930,9 +929,7 @@ def simhash_near_dup_pairs(
         bands = bands.join(small, on=["band", "key"], how="left_semi")
     a = bands.alias("a")
     b = bands.alias("b")
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         a.join(b, on=["band", "key"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
@@ -943,8 +940,7 @@ def simhash_near_dup_pairs(
             ).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming),
-        sigs,
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -975,9 +971,8 @@ def dedup_clusters(
     otherwise double per round); each superseded round's checkpoint
     blocks are released immediately (and the edge list's after the loop)
     so repeated ``near_dedup`` calls in a long session do not accumulate
-    executor storage, and the FINAL labels relation is pinned on the
-    result for the caller's ``release_pinned``. Convergence is detected
-    EXACTLY by
+    executor storage; the FINAL labels checkpoint is the result and goes
+    to the caller's cache scope. Convergence is detected EXACTLY by
     counting changed labels against the previous round's checkpointed set
     — a join over the tiny (node, label) relation that works for ANY id
     type (a numeric "monotone sum" signature would crash casting string
@@ -992,7 +987,7 @@ def dedup_clusters(
     already their own keeper). Input pairs may be duplicated/asymmetric;
     the edge set is symmetrized internally.
     """
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
+    from llm_aided_ocr_spark.operators.util import cache_scope, checkpoint
 
     edges = pairs_df.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -1000,59 +995,52 @@ def dedup_clusters(
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # materialize the (16-byte-row) edge list ONCE: every propagation round
-    # joins against it, and without this the full pairs_df lineage (for
-    # near_dedup: the whole LSH candidate generation) would re-execute per
-    # round
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 1
-    for _ in range(max_iter):
-        prop = edges.join(
-            labels, edges["dst"] == labels["node"]
-        ).select(F.col("src").alias("node"), F.col("label"))
-        new_labels = (
-            labels.union(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+    with cache_scope() as scope:
+        # materialize the (16-byte-row) edge list ONCE: every propagation
+        # round joins against it, and without this the full pairs_df
+        # lineage (for near_dedup: the whole LSH candidate generation)
+        # would re-execute per round
+        edges = checkpoint(edges)
+        labels = checkpoint(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("id"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        # the previous round's checkpoint is superseded the moment the
-        # convergence check (its last consumer) has run — release its
-        # blocks now rather than letting them pile up until GC
-        release_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # silent truncation would return WRONG labels (multiple "keepers"
-        # inside one true component) — refuse instead
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} rounds: a "
-            "component has diameter > max_iter (e.g. a long chain of "
-            "pairwise near-dups). Raise max_iter, or switch to a "
-            "large-star/small-star decomposition for adversarial graphs."
-        )
-    release_local_checkpoint(edges)
-    # the result still READS the final labels checkpoint lazily — pin it
-    # so the caller's release_pinned frees the blocks after its terminal
-    # action (the same lifecycle as every operator-internal cache)
-    return pin(
-        labels.select(F.col("node").alias("id"), F.col("label").alias("cluster_id")),
-        labels,
-    )
+        changed = 1
+        for _ in range(max_iter):
+            prop = edges.join(
+                labels, edges["dst"] == labels["id"]
+            ).select(F.col("src").alias("id"), F.col("cluster_id"))
+            new_labels = checkpoint(
+                labels.union(prop)
+                .groupBy("id")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
+                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+                .limit(1)
+                .count()
+            )
+            # the previous round is superseded the moment the
+            # convergence check (its last consumer) has run
+            scope.release(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+        if changed != 0:
+            # silent truncation would return WRONG labels (multiple
+            # "keepers" inside one true component) — refuse instead
+            raise RuntimeError(
+                f"dedup_clusters did not converge in {max_iter} rounds: a "
+                "component has diameter > max_iter (e.g. a long chain of "
+                "pairwise near-dups). Raise max_iter, or switch to a "
+                "large-star/small-star decomposition for adversarial graphs."
+            )
+        # the final labels checkpoint IS the result
+        scope.keep(labels)
+    return labels
 
 
 def dedup_keep_list(
@@ -1065,10 +1053,8 @@ def dedup_keep_list(
     representative. Materialize survivors with an anti-join of the corpus
     against ``filter(~keep)`` (16-byte rows; bucket the corpus on the id
     for an exchange-free join, see ``sources/io.py``)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     c = dedup_clusters(pairs_df, id_a=id_a, id_b=id_b)
-    return carry_pins(c, c.withColumn("keep", F.col("id") == F.col("cluster_id")))
+    return c.withColumn("keep", F.col("id") == F.col("cluster_id"))
 
 
 def near_dedup(
@@ -1084,21 +1070,22 @@ def near_dedup(
     rows with their original schema. The anti-join's right side is the
     tiny ``(id)`` drop list (broadcast-eligible; at 100 TB bucket the
     corpus on the id for an exchange-free join, see ``sources/io.py``)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, release_pinned
+    from llm_aided_ocr_spark.operators.util import cache_scope
 
-    pairs = minhash_dedup_pairs(
-        df, threshold=threshold, text_col=text_col, id_col=id_col,
-        **minhash_kwargs,
+    with cache_scope() as scope:
+        pairs = minhash_dedup_pairs(
+            df, threshold=threshold, text_col=text_col, id_col=id_col,
+            **minhash_kwargs,
+        )
+        clusters = dedup_clusters(pairs)
+        # the cluster rounds ran eagerly, so nothing below reads the
+        # pairs plan: its signature cache is released on exit. The
+        # anti-join still reads the final labels checkpoint.
+        scope.keep(clusters)
+    drops = clusters.filter(F.col("id") != F.col("cluster_id")).select(
+        F.col("id").alias(id_col)
     )
-    keep_list = dedup_keep_list(pairs)
-    drops = keep_list.filter(~F.col("keep")).select(F.col("id").alias(id_col))
-    # dedup_clusters ran eagerly (localCheckpoint rounds), so `drops` no
-    # longer depends on the pairs plan — the signature cache pinned inside
-    # minhash_dedup_pairs is dead; release it here instead of leaking it
-    # into the caller's session. The final labels checkpoint is still
-    # read by the anti-join: its pin rides the result for the caller.
-    release_pinned(pairs)
-    return carry_pins(keep_list, df.join(drops, on=id_col, how="left_anti"))
+    return df.join(drops, on=id_col, how="left_anti")
 
 
 def near_dedup_incremental(
@@ -1137,8 +1124,8 @@ def near_dedup_incremental(
 
     Returns surviving new rows with their original schema. To advance
     the index, append ``minhash_signatures(kept)`` (or reuse this run's
-    — the signature relation is pinned on the result; read it before
-    ``release_pinned``).
+    — the signature relation stays cached until the caller's cache scope
+    releases it).
 
     Scale shape: the index contributes ONLY 8-byte-keyed ``(id, band,
     bucket)`` rows — its text is never read — and those rows are
@@ -1150,12 +1137,12 @@ def near_dedup_incremental(
     batch this shuffles O(batch + matched-buckets) rows, not O(corpus):
     re-running batch :func:`near_dedup` over the whole corpus for each
     increment would re-shuffle every signature every time."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
+    from llm_aided_ocr_spark.operators.util import cache, checkpoint
 
-    new_sigs = minhash_signatures(
+    new_sigs = cache(minhash_signatures(
         new_df, num_perm=num_perm, n=n, seed=seed, text_col=text_col,
         id_col=id_col, hash_family=hash_family,
-    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)).cache()
+    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)))
     idx_sigs = index_sig_df.filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P))
 
     bn = _band_buckets(new_sigs, bands, rows_per_band)
@@ -1184,7 +1171,7 @@ def near_dedup_incremental(
             .select("band", "bucket")
         )
         u = u.join(small, on=["band", "bucket"], how="left_semi")
-    u = u.cache()
+    u = cache(u)
     un = u.filter(F.col("is_new")).drop("is_new")
     ui = u.filter(~F.col("is_new")).drop("is_new")
 
@@ -1222,7 +1209,7 @@ def near_dedup_incremental(
         .select(F.col("id_a").alias("id"))
         .distinct()
     )
-    cross_hit = cross_hit_plan.localCheckpoint(eager=True)
+    cross_hit = checkpoint(cross_hit_plan)
 
     within = (
         un.alias("a")
@@ -1248,13 +1235,10 @@ def near_dedup_incremental(
         "id", id_col
     )
     kept = new_df.join(drops, on=id_col, how="left_anti")
-    kept = carry_pins(clusters, kept)
-    kept = pin(pin(pin(kept, new_sigs), u), cross_hit)
     # Test probe: the candidate subtree now executes at the eager
     # checkpoint, so the index-never-shuffled plan property is no longer
     # visible in the RESULT's (truncated) plan — expose the logical
-    # candidate plan for plan-shape tests (same object-attribute pattern
-    # as pin()).
+    # candidate plan for plan-shape tests.
     kept._ocr_spark_index_probe = cross_hit_plan  # type: ignore[attr-defined]
     return kept
 
@@ -1292,7 +1276,7 @@ def apply_incremental_dedup(
     AFTER the output append but before the index append, leaving the two
     sinks inconsistent until replay. An unknown key now fails at call
     time, before anything is written."""
-    from llm_aided_ocr_spark.operators.util import release_pinned
+    from llm_aided_ocr_spark.operators.util import cache, cache_scope
 
     from pyspark.errors import AnalysisException
 
@@ -1312,22 +1296,18 @@ def apply_incremental_dedup(
             batch_df, text_col=text_col, id_col=id_col, **sig_kwargs
         )
         idx = spark.createDataFrame([], sigs.schema)
-    kept = near_dedup_incremental(
-        batch_df, idx, threshold=threshold,
-        text_col=text_col, id_col=id_col,
-        bands=bands, rows_per_band=rows_per_band,
-        max_bucket_size=max_bucket_size, **sig_kwargs,
-    )
-    kept = kept.persist()
-    try:
+    with cache_scope():
+        kept = cache(near_dedup_incremental(
+            batch_df, idx, threshold=threshold,
+            text_col=text_col, id_col=id_col,
+            bands=bands, rows_per_band=rows_per_band,
+            max_bucket_size=max_bucket_size, **sig_kwargs,
+        ))
         kept.write.mode("append").parquet(out_path)
         minhash_signatures(
             kept, text_col=text_col, id_col=id_col, **sig_kwargs
         ).write.mode("append").parquet(index_path)
         return kept.count()
-    finally:
-        release_pinned(kept)
-        kept.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -1473,7 +1453,7 @@ def dup_span_profile(
     entirely (their stripped stream IS the normalized text)."""
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import let_, pin
+    from llm_aided_ocr_spark.operators.util import cache, let_
 
     # The gram relation feeds BOTH the frequency count and the
     # duplicate-position probe; unpersisted, each side runs its own
@@ -1481,12 +1461,14 @@ def dup_span_profile(
     # the physical plan). Persist the per-doc hash ARRAYS (8
     # bytes/token, pre-explode — the narrowest form both sides can
     # derive from) so the corpus crosses the Python boundary once;
-    # MEMORY_AND_DISK, pinned on the result for deterministic
-    # release. The explodes stay JVM-side and cheap (guide §4: pay
+    # MEMORY_AND_DISK, owned by the caller's cache scope. The explodes stay JVM-side and cheap (guide §4: pay
     # the Python boundary once).
-    gh_rel = gram_hashes_arrow(
-        df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    gh_rel = cache(
+        gram_hashes_arrow(
+            df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     ex = gh_rel.select(
         F.col("id").alias("_ds_id"), F.posexplode("ghs").alias("pos", "gh")
     )
@@ -1587,7 +1569,7 @@ def dup_span_profile(
             .otherwise(let_(merged, _strip))
             .alias("stripped")
         )
-    return pin(out.select(*cols), gh_rel)
+    return out.select(*cols)
 
 
 # ---------------------------------------------------------------------------

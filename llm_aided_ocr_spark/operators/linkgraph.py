@@ -366,7 +366,7 @@ def pagerank(
     NOT DuckDB-oracled (the driver records a rows-only check); the unit
     tests pin it against an independent dense NumPy power iteration
     instead."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
+    from llm_aided_ocr_spark.operators.util import cache_scope, checkpoint
 
     edges = graph.select(
         F.col(src_col).alias("src"),
@@ -374,54 +374,51 @@ def pagerank(
         F.col(weight_col).cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_n = (
-        edges.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .union(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # hosts with no outlinks (pure sinks): their rank is the dangling mass
-    sinks = nodes.join(
-        out_w, nodes["host"] == out_w["src"], "left_anti"
-    ).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    for _ in range(iters):
-        dangling = (
-            ranks.join(sinks, "host", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
+    with cache_scope() as scope:
+        edges_n = checkpoint(
+            edges.join(out_w, "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
         )
-        contribs = (
-            edges_n.join(ranks, edges_n["src"] == ranks["host"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("share") * F.col("rank")).alias("c"))
+        nodes = checkpoint(
+            edges.select(F.col("src").alias("host"))
+            .union(edges.select(F.col("dst").alias("host")))
+            .distinct()
         )
-        new_ranks = (
-            nodes.join(contribs, nodes["host"] == contribs["dst"], "left")
-            .select(
-                "host",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
+        n = nodes.count()
+        if n == 0:
+            scope.keep(nodes)
+            return nodes.withColumn("rank", F.lit(0.0))
+        # hosts with no outlinks (pure sinks): their rank is the dangling mass
+        sinks = checkpoint(
+            nodes.join(out_w, nodes["host"] == out_w["src"], "left_anti")
+        )
+        ranks = checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
+        for _ in range(iters):
+            dangling = (
+                ranks.join(sinks, "host", "left_semi")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                .first()[0]
             )
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(ranks)
-        ranks = new_ranks
-    release_local_checkpoint(edges_n)
-    release_local_checkpoint(sinks)
-    release_local_checkpoint(nodes)
-    return pin(ranks.select("host", "rank"), ranks)
+            contribs = (
+                edges_n.join(ranks, edges_n["src"] == ranks["host"])
+                .groupBy("dst")
+                .agg(F.sum(F.col("share") * F.col("rank")).alias("c"))
+            )
+            new_ranks = checkpoint(
+                nodes.join(contribs, nodes["host"] == contribs["dst"], "left")
+                .select(
+                    "host",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
+                    ).alias("rank"),
+                )
+            )
+            scope.release(ranks)
+            ranks = new_ranks
+        scope.keep(ranks)
+    return ranks.select("host", "rank")
 
 
 def host_degrees(graph: DataFrame) -> DataFrame:
@@ -437,9 +434,9 @@ def host_degrees(graph: DataFrame) -> DataFrame:
     # relation is host-cardinality — narrow by construction.
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import cache
 
-    graph = graph.persist(StorageLevel.MEMORY_AND_DISK)
+    graph = cache(graph, StorageLevel.MEMORY_AND_DISK)
     out_d = graph.groupBy(F.col("src_host").alias("host")).agg(
         F.count(F.lit(1)).alias("out_hosts"),
         F.sum("n_links").alias("out_links"),
@@ -448,16 +445,12 @@ def host_degrees(graph: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("in_hosts"),
         F.sum("n_links").alias("in_links"),
     )
-    return pin(
-        out_d.join(in_d, "host", "full_outer")
-        .select(
-            "host",
-            F.coalesce("out_hosts", F.lit(0)).alias("out_hosts"),
-            F.coalesce("out_links", F.lit(0)).alias("out_links"),
-            F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
-            F.coalesce("in_links", F.lit(0)).alias("in_links"),
-        ),
-        graph,
+    return out_d.join(in_d, "host", "full_outer").select(
+        "host",
+        F.coalesce("out_hosts", F.lit(0)).alias("out_hosts"),
+        F.coalesce("out_links", F.lit(0)).alias("out_links"),
+        F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
+        F.coalesce("in_links", F.lit(0)).alias("in_links"),
     )
 
 
@@ -522,7 +515,9 @@ def anchor_corpus(
     # cache (guide §2.4).
     from pyspark import StorageLevel
 
-    a = a.persist(StorageLevel.MEMORY_AND_DISK)
+    from llm_aided_ocr_spark.operators.util import cache
+
+    a = cache(a, StorageLevel.MEMORY_AND_DISK)
     stats = a.groupBy("dst_host").agg(
         F.count(F.lit(1)).alias("n_anchors"),
         F.countDistinct("src_host").alias("n_src_hosts"),
@@ -540,9 +535,7 @@ def anchor_corpus(
             ).alias("anchors_cat")
         )
     )
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(stats.join(texts, "dst_host"), a)
+    return stats.join(texts, "dst_host")
 
 
 def trustrank(
@@ -589,7 +582,7 @@ def trustrank(
     eager checkpoint with immediate predecessor release, dangling mass
     as a bounded 1-row collect. ``|S|`` is a driver count: a trust seed
     list is curated and bounded by construction."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
+    from llm_aided_ocr_spark.operators.util import cache_scope, checkpoint
 
     edges = graph.select(
         F.col(src_col).alias("src"),
@@ -597,79 +590,83 @@ def trustrank(
         F.col(weight_col).cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_n = (
-        edges.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)
-    )
-    seed_nodes = seeds.select(F.col(seed_col).alias("host")).distinct()
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .union(edges.select(F.col("dst").alias("host")))
-        .union(seed_nodes)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    flagged = nodes.join(
-        seed_nodes.withColumn("_is_seed", F.lit(True)), "host", "left"
-    ).select(
-        "host", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
-    ).localCheckpoint(eager=True)
-    nodes.unpersist()
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        raise ValueError("trustrank requires a non-empty seed set")
-    sinks = flagged.select("host").join(
-        out_w, flagged["host"] == out_w["src"], "left_anti"
-    ).localCheckpoint(eager=True)
-    tele = int((1.0 - damping) * scale) // n_seeds
-    ranks = flagged.withColumn(
-        "itrust",
-        F.when(F.col("_is_seed"), F.lit(scale // n_seeds)).otherwise(
-            F.lit(0)
-        ).cast("bigint"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        dangling = int(
-            ranks.join(sinks, "host", "left_semi")
-            .agg(F.coalesce(F.sum("itrust"), F.lit(0)))
-            .first()[0]
+    with cache_scope() as scope:
+        edges_n = checkpoint(
+            edges.join(out_w, "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
         )
-        contribs = (
-            edges_n.join(ranks, edges_n["src"] == ranks["host"])
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.floor(F.col("share") * F.col("itrust")).cast("bigint")
-                ).alias("c")
+        seed_nodes = seeds.select(F.col(seed_col).alias("host")).distinct()
+        nodes = checkpoint(
+            edges.select(F.col("src").alias("host"))
+            .union(edges.select(F.col("dst").alias("host")))
+            .union(seed_nodes)
+            .distinct()
+        )
+        flagged = checkpoint(
+            nodes.join(
+                seed_nodes.withColumn("_is_seed", F.lit(True)), "host", "left"
+            ).select(
+                "host", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
             )
         )
-        new_ranks = (
-            ranks.join(contribs, ranks["host"] == contribs["dst"], "left")
-            .select(
-                "host", "_is_seed",
-                (
-                    F.floor(
-                        F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0))
-                            + F.when(
-                                F.col("_is_seed"),
-                                F.lit(dangling // n_seeds),
-                            ).otherwise(F.lit(0))
+        scope.release(nodes)
+        n_seeds = seed_nodes.count()
+        if n_seeds == 0:
+            raise ValueError("trustrank requires a non-empty seed set")
+        sinks = checkpoint(
+            flagged.select("host").join(
+                out_w, flagged["host"] == out_w["src"], "left_anti"
+            )
+        )
+        tele = int((1.0 - damping) * scale) // n_seeds
+        ranks = checkpoint(
+            flagged.withColumn(
+                "itrust",
+                F.when(F.col("_is_seed"), F.lit(scale // n_seeds)).otherwise(
+                    F.lit(0)
+                ).cast("bigint"),
+            )
+        )
+        for _ in range(iters):
+            dangling = int(
+                ranks.join(sinks, "host", "left_semi")
+                .agg(F.coalesce(F.sum("itrust"), F.lit(0)))
+                .first()[0]
+            )
+            contribs = (
+                edges_n.join(ranks, edges_n["src"] == ranks["host"])
+                .groupBy("dst")
+                .agg(
+                    F.sum(
+                        F.floor(F.col("share") * F.col("itrust")).cast("bigint")
+                    ).alias("c")
+                )
+            )
+            new_ranks = checkpoint(
+                ranks.join(contribs, ranks["host"] == contribs["dst"], "left")
+                .select(
+                    "host", "_is_seed",
+                    (
+                        F.floor(
+                            F.lit(damping)
+                            * (
+                                F.coalesce(F.col("c"), F.lit(0))
+                                + F.when(
+                                    F.col("_is_seed"),
+                                    F.lit(dangling // n_seeds),
+                                ).otherwise(F.lit(0))
+                            )
+                        ).cast("bigint")
+                        + F.when(F.col("_is_seed"), F.lit(tele)).otherwise(
+                            F.lit(0)
                         )
-                    ).cast("bigint")
-                    + F.when(F.col("_is_seed"), F.lit(tele)).otherwise(
-                        F.lit(0)
-                    )
-                ).alias("itrust"),
+                    ).alias("itrust"),
+                )
             )
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(ranks)
-        ranks = new_ranks
-    out = ranks.select("host", "itrust")
-    return pin(out, ranks)
+            scope.release(ranks)
+            ranks = new_ranks
+        scope.keep(ranks)
+    return ranks.select("host", "itrust")
 
 
 def hits(
@@ -720,73 +717,82 @@ def hits(
     ``dedup_clusters`` lineage discipline. No windows, no skew pivot:
     a mega in-degree host is one groupBy key with map-side partial
     aggregation."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
+    from llm_aided_ocr_spark.operators.util import cache_scope, checkpoint
 
-    edges = graph.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("bigint").alias("w"),
-    ).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .union(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hub = nodes.withColumn(
-        "hub", F.lit(int(scale)).cast("bigint")
-    ).localCheckpoint(eager=True)
-    auth = None
-    for _ in range(iters):
-        a_raw = (
-            edges.join(hub, edges["src"] == hub["host"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("w") * F.col("hub")).alias("a_raw"))
+    with cache_scope() as scope:
+        edges = checkpoint(
+            graph.select(
+                F.col(src_col).alias("src"),
+                F.col(dst_col).alias("dst"),
+                F.col(weight_col).cast("bigint").alias("w"),
+            )
         )
-        new_auth = nodes.join(
-            a_raw, nodes["host"] == a_raw["dst"], "left"
-        ).select(
-            "host",
-            F.coalesce("a_raw", F.lit(0)).cast("bigint").alias("auth"),
-        ).localCheckpoint(eager=True)
-        total_a = int(
-            new_auth.agg(F.coalesce(F.sum("auth"), F.lit(0))).first()[0]
+        nodes = checkpoint(
+            edges.select(F.col("src").alias("host"))
+            .union(edges.select(F.col("dst").alias("host")))
+            .distinct()
         )
-        da = max(1, -(-total_a // int(scale)))
-        new_auth2 = new_auth.select(
-            "host",
-            F.expr(f"auth div {da}").cast("bigint").alias("auth"),
-        ).localCheckpoint(eager=True)
-        release_local_checkpoint(new_auth)
-        if auth is not None:
-            release_local_checkpoint(auth)
-        auth = new_auth2
-        h_raw = (
-            edges.join(auth, edges["dst"] == auth["host"])
-            .groupBy("src")
-            .agg(F.sum(F.col("w") * F.col("auth")).alias("h_raw"))
+        hub = checkpoint(
+            nodes.withColumn("hub", F.lit(int(scale)).cast("bigint"))
         )
-        new_hub = nodes.join(
-            h_raw, nodes["host"] == h_raw["src"], "left"
-        ).select(
-            "host",
-            F.coalesce("h_raw", F.lit(0)).cast("bigint").alias("hub"),
-        ).localCheckpoint(eager=True)
-        total_h = int(
-            new_hub.agg(F.coalesce(F.sum("hub"), F.lit(0))).first()[0]
-        )
-        dh = max(1, -(-total_h // int(scale)))
-        new_hub2 = new_hub.select(
-            "host",
-            F.expr(f"hub div {dh}").cast("bigint").alias("hub"),
-        ).localCheckpoint(eager=True)
-        release_local_checkpoint(new_hub)
-        release_local_checkpoint(hub)
-        hub = new_hub2
-    if auth is None:
-        auth = nodes.withColumn("auth", F.lit(0).cast("bigint"))
-    out = hub.join(auth, "host").select("host", "hub", "auth")
-    return pin(out, hub)
+        auth = None
+        for _ in range(iters):
+            a_raw = (
+                edges.join(hub, edges["src"] == hub["host"])
+                .groupBy("dst")
+                .agg(F.sum(F.col("w") * F.col("hub")).alias("a_raw"))
+            )
+            new_auth = checkpoint(
+                nodes.join(a_raw, nodes["host"] == a_raw["dst"], "left").select(
+                    "host",
+                    F.coalesce("a_raw", F.lit(0)).cast("bigint").alias("auth"),
+                )
+            )
+            total_a = int(
+                new_auth.agg(F.coalesce(F.sum("auth"), F.lit(0))).first()[0]
+            )
+            da = max(1, -(-total_a // int(scale)))
+            new_auth2 = checkpoint(
+                new_auth.select(
+                    "host",
+                    F.expr(f"auth div {da}").cast("bigint").alias("auth"),
+                )
+            )
+            scope.release(new_auth)
+            if auth is not None:
+                scope.release(auth)
+            auth = new_auth2
+            h_raw = (
+                edges.join(auth, edges["dst"] == auth["host"])
+                .groupBy("src")
+                .agg(F.sum(F.col("w") * F.col("auth")).alias("h_raw"))
+            )
+            new_hub = checkpoint(
+                nodes.join(h_raw, nodes["host"] == h_raw["src"], "left").select(
+                    "host",
+                    F.coalesce("h_raw", F.lit(0)).cast("bigint").alias("hub"),
+                )
+            )
+            total_h = int(
+                new_hub.agg(F.coalesce(F.sum("hub"), F.lit(0))).first()[0]
+            )
+            dh = max(1, -(-total_h // int(scale)))
+            new_hub2 = checkpoint(
+                new_hub.select(
+                    "host",
+                    F.expr(f"hub div {dh}").cast("bigint").alias("hub"),
+                )
+            )
+            scope.release(new_hub)
+            scope.release(hub)
+            hub = new_hub2
+        if auth is None:
+            scope.keep(nodes)
+            auth = nodes.withColumn("auth", F.lit(0).cast("bigint"))
+        else:
+            scope.keep(auth)
+        scope.keep(hub)
+    return hub.join(auth, "host").select("host", "hub", "auth")
 
 
 def host_triangles(
@@ -818,14 +824,15 @@ def host_triangles(
 
     ``clustering = 2*T / (deg*(deg-1))`` (NULL for degree < 2) — left
     as an exact ratio of integers."""
-    e = (
+    from llm_aided_ocr_spark.operators.util import checkpoint
+
+    e = checkpoint(
         graph.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("host"))
@@ -846,7 +853,7 @@ def host_triangles(
         .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
         .alias("x")
     ).select(F.col("x.s").alias("s"), F.col("x.t").alias("t"))
-    fwd = fwd.localCheckpoint(eager=True)
+    fwd = checkpoint(fwd)
     wedges = (
         fwd.alias("p")
         .join(fwd.alias("q"), F.col("p.s") == F.col("q.s"))

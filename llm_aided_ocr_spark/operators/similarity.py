@@ -314,10 +314,11 @@ def embedding_near_dup_pairs(
         sk = quantized_sketch(vectors, planes, vec_col)
     else:
         sk = hyperplane_sketch(vectors, dim, num_planes, seed, vec_col)
+    from llm_aided_ocr_spark.operators.util import cache
+
     # cache: the sketch feeds the bucket-size aggregation and both join
     # sides; uncached it would be recomputed per consumer
-    cached_sketch = sk.select(id_col, vec_col, "bucket").cache()
-    buckets = cached_sketch
+    buckets = cache(sk.select(id_col, vec_col, "bucket"))
     if max_bucket_size is not None:
         small = (
             buckets.groupBy("bucket")
@@ -357,15 +358,12 @@ def embedding_near_dup_pairs(
             yield out
 
     id_type = dict(cand.dtypes)["id_a"]
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         cand.mapInPandas(
             _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
         )
         .distinct()
-        .filter(F.col("cosine") >= threshold),
-        cached_sketch,
+        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -563,9 +561,10 @@ def semantic_dedup_pairs(
     skipping one would change SEMANTICS, not just recall. The cosine
     verify is the same Arrow-vectorized pass as
     :func:`embedding_near_dup_pairs`."""
+    from llm_aided_ocr_spark.operators.util import cache
+
     assigned = ivf_assign(vectors, centroids, vec_col)
-    cached = assigned.select(id_col, vec_col, "cell").cache()
-    cells = cached
+    cells = cache(assigned.select(id_col, vec_col, "cell"))
     if max_cell_size is not None:
         small = (
             cells.groupBy("cell")
@@ -601,14 +600,9 @@ def semantic_dedup_pairs(
             yield out
 
     id_type = dict(cand.dtypes)["id_a"]
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
-        cand.mapInPandas(
-            _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-        ).filter(F.col("cosine") >= tau),
-        cached,
-    )
+    return cand.mapInPandas(
+        _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
+    ).filter(F.col("cosine") >= tau)
 
 
 def semantic_dedup(
@@ -638,33 +632,27 @@ def semantic_dedup(
 
     The drop list is a tiny ``(id)`` relation — broadcast-eligible
     anti-join, document vectors move at most once."""
-    from llm_aided_ocr_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_keep_list,
-    )
-    from llm_aided_ocr_spark.operators.util import carry_pins, release_pinned
+    from llm_aided_ocr_spark.operators.dedup import dedup_clusters
+    from llm_aided_ocr_spark.operators.util import cache_scope
 
     if keep not in ("min_id", "farthest"):
         raise ValueError(f"unknown keep policy: {keep!r}")
 
-    pairs = semantic_dedup_pairs(
-        vectors, centroids, tau=tau, id_col=id_col, vec_col=vec_col
-    )
+    with cache_scope() as scope:
+        pairs = semantic_dedup_pairs(
+            vectors, centroids, tau=tau, id_col=id_col, vec_col=vec_col
+        )
+        clusters = dedup_clusters(pairs)
+        # the cluster rounds ran eagerly, so nothing below reads the
+        # pairs plan: its cell cache is released on exit. The result
+        # still reads the final labels checkpoint.
+        scope.keep(clusters)
     if keep == "min_id":
-        keep_df = dedup_keep_list(pairs)
-        drops = keep_df.filter(~F.col("keep")).select(
+        drops = clusters.filter(F.col("id") != F.col("cluster_id")).select(
             F.col("id").alias(id_col)
         )
-        # dedup_clusters materialized eagerly (localCheckpoint rounds):
-        # the sketch/cell cache pinned inside semantic_dedup_pairs is
-        # dead here
-        release_pinned(pairs)
-        return carry_pins(
-            keep_df, vectors.join(drops, on=id_col, how="left_anti")
-        )
+        return vectors.join(drops, on=id_col, how="left_anti")
 
-    clusters = dedup_clusters(pairs)
-    release_pinned(pairs)
     # cosine of each clustered member to ITS centroid (cells reuse the
     # same literal-centroid assignment; only cluster members pay)
     cents = F.array(
@@ -714,9 +702,7 @@ def semantic_dedup(
         )
         .select(F.col(id_col))
     )
-    return carry_pins(
-        clusters, vectors.join(drops, on=id_col, how="left_anti")
-    )
+    return vectors.join(drops, on=id_col, how="left_anti")
 
 
 def quantize_embeddings(
@@ -826,7 +812,7 @@ def mine_bitext(
     The k-NN windows partition by vector id (massively parallel, no
     global sort); everything after quantization is native columnar —
     zero Python rows."""
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import cache
 
     # Norms are per-VECTOR, not per-pair: compute them once per side
     # (|X| + |Y| aggregates) instead of letting cosine_col re-run both
@@ -852,7 +838,7 @@ def mine_bitext(
     # lets all three reuse it (guide §2.4 — one exchange shared by every
     # same-keyed consumer; the window's shuffle it replaces was already
     # a full pass over the pair relation, so no new at-scale cost).
-    pairs = (
+    pairs = cache(
         qx.crossJoin(qy)
         .select(
             "x_id",
@@ -860,7 +846,6 @@ def mine_bitext(
             F.floor(cos * F.lit(float(scale))).cast("bigint").alias("qcos"),
         )
         .repartition("x_id")
-        .cache()
     )
     wx = Window.partitionBy("x_id").orderBy(F.desc("qcos"), F.col("y_id"))
     sx = (
@@ -896,7 +881,7 @@ def mine_bitext(
     )
     fwd = Window.partitionBy("x_id").orderBy(F.desc("margin"), F.col("y_id"))
     bwd = Window.partitionBy("y_id").orderBy(F.desc("margin"), F.col("x_id"))
-    out = (
+    return (
         m.withColumn("rf", F.row_number().over(fwd))
         .withColumn("rb", F.row_number().over(bwd))
         .filter(
@@ -906,7 +891,6 @@ def mine_bitext(
         )
         .select("x_id", "y_id", "margin")
     )
-    return pin(out, pairs)
 
 
 def sign_codes_col(vec_col, dim: int):

@@ -3,7 +3,12 @@
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -191,72 +196,119 @@ def corpus_scaled(derived: DataFrame) -> DataFrame:
     return derived.hint("shuffle_hash")
 
 
-def pin(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Record that ``result``'s plan depends on the persisted ``cached``
-    relation, so callers can release it deterministically with
-    :func:`release_pinned` after their terminal action — instead of
-    leaning on ContextCleaner GC, which in a long-lived session pins
-    executor memory/disk until the plan object happens to be collected.
+class CacheScope:
+    """The relations cached or checkpointed (:func:`cache`,
+    :func:`checkpoint`) while this scope was the innermost open one.
+    Closing the scope releases them; :meth:`keep` hands one that a
+    returned plan still reads to the enclosing scope instead."""
 
-    LIMITATION: the pin lives on the DataFrame OBJECT. Any further
-    transformation (``result.filter(...)``, ``.select(...)``) returns a
-    new object without it — either release the pin on ``result`` itself
-    after the terminal action, or move it with :func:`carry_pins` before
-    transforming. (Plan-level tracking would need a JVM-side hook; the
-    object-level handle plus this rule is the deliberate trade.)"""
-    pinned = list(getattr(result, "_ocr_spark_pinned", None) or [])
-    pinned.append(cached)
-    result._ocr_spark_pinned = pinned  # type: ignore[attr-defined]
-    return result
+    def __init__(self, parent: CacheScope | None = None):
+        self.parent = parent
+        self._held: list = []  # (relation, is_local_checkpoint)
+        # the root scope is shared by every thread of the driver
+        self._lock = threading.Lock()
+
+    def _add(self, df: DataFrame, checkpointed: bool) -> DataFrame:
+        with self._lock:
+            self._held.append((df, checkpointed))
+        return df
+
+    def _take(self, df: DataFrame) -> tuple:
+        with self._lock:
+            for i, entry in enumerate(self._held):
+                if entry[0] is df:
+                    return self._held.pop(i)
+        raise ValueError("relation is not held by this scope")
+
+    def keep(self, df: DataFrame) -> None:
+        """Move ``df`` to the enclosing scope: the plan this scope's
+        owner returns still reads it."""
+        self.parent._add(*self._take(df))
+
+    def release(self, df: DataFrame | None = None, blocking: bool = True) -> int:
+        """Release ``df`` now (a superseded round of an iterative
+        operator), or with no argument everything held. Returns the
+        number of relations released."""
+        if df is not None:
+            _free(*self._take(df), blocking)
+            return 1
+        with self._lock:
+            held, self._held = self._held, []
+        for entry in reversed(held):
+            _free(*entry, blocking)
+        return len(held)
 
 
-def carry_pins(src: DataFrame, dst: DataFrame) -> DataFrame:
-    """Move ``src``'s pinned relations onto ``dst`` (a derived DataFrame —
-    ``src.select(...)`` etc. returns a NEW object without the pin
-    attribute, which would orphan the cache)."""
-    for cached in getattr(src, "_ocr_spark_pinned", None) or []:
-        pin(dst, cached)
-    src._ocr_spark_pinned = []  # type: ignore[attr-defined]
-    return dst
-
-
-def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
-    """Free the executor storage blocks behind a
-    ``localCheckpoint(eager=True)`` relation. ``DataFrame.unpersist`` only
-    clears CacheManager entries; a local checkpoint's blocks belong to its
-    internal RDD, reachable through the plan's ``LogicalRDD`` node. That
-    is private API (pinned by test for this Spark version), so the access
-    is failure-safe: on any layout change the blocks simply remain until
-    ContextCleaner GC — the pre-helper behavior, a bounded leak, never an
-    error. Returns True when blocks were actually released."""
+def _free(df: DataFrame, checkpointed: bool, blocking: bool) -> None:
+    """Drop one relation's storage. ``DataFrame.unpersist`` only clears
+    CacheManager entries; a local checkpoint's blocks belong to its
+    internal RDD, reachable through the plan's ``LogicalRDD`` node
+    (private API, pinned by test for this Spark version). Failure-safe:
+    on a layout change, or for a relation whose session has stopped, the
+    blocks are left to ContextCleaner GC — a bounded leak, never an
+    error."""
     try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        rdd.unpersist(blocking)
-        return True
-    except Exception:
-        return False
+        if checkpointed:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
+        else:
+            df.unpersist(blocking=blocking)
+    except (Py4JError, PySparkException):
+        pass
 
 
-def release_pinned(result: DataFrame, blocking: bool = True) -> int:
-    """Unpersist every relation pinned on ``result`` (see :func:`pin`) —
-    both CacheManager caches and ``localCheckpoint`` relations (whose
-    blocks need :func:`release_local_checkpoint`). Safe on any DataFrame
-    (no-op when nothing is pinned), idempotent. Returns the number of
-    relations released.
+# Relations registered while no scope is open; released by
+# release_pinned(). Open scopes are per thread, so a streaming batch
+# callback never registers into a scope of the driver thread.
+_ROOT = CacheScope()
+_open = threading.local()
 
-    ``blocking`` defaults to True (round 6): an async unpersist lets
-    block eviction run concurrently with whatever the session does next
-    — in a many-query sweep that bleeds one query's cache cleanup into
-    the next query's measured window; waiting costs the CALLER nothing
-    measurable and keeps timings independent. Pass ``blocking=False``
-    for fire-and-forget callers on a latency-sensitive path."""
-    pinned = getattr(result, "_ocr_spark_pinned", None) or []
-    for df in pinned:
-        df.unpersist(blocking=blocking)
-        release_local_checkpoint(df, blocking=blocking)
-    result._ocr_spark_pinned = []  # type: ignore[attr-defined]
-    return len(pinned)
 
+def _innermost() -> CacheScope:
+    stack = getattr(_open, "stack", None)
+    return stack[-1] if stack else _ROOT
+
+
+@contextmanager
+def cache_scope():
+    """``with cache_scope() as s:`` — every :func:`cache` /
+    :func:`checkpoint` inside the block registers with ``s``; on exit
+    (exceptions included) ``s`` releases all of them except those handed
+    on with ``s.keep(df)``."""
+    scope = CacheScope(_innermost())
+    stack = _open.__dict__.setdefault("stack", [])
+    stack.append(scope)
+    try:
+        yield scope
+    finally:
+        stack.pop()
+        scope.release()
+
+
+def cache(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """``df.persist(level)``, owned by the innermost open
+    :func:`cache_scope` (or the root scope). The default is Spark's
+    ``DataFrame.cache()`` level (MEMORY_AND_DISK, deserialized)."""
+    return _innermost()._add(df.persist(level), False)
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, owned like :func:`cache`."""
+    return _innermost()._add(df.localCheckpoint(eager=eager), True)
+
+
+def release_pinned(df: DataFrame | None = None, blocking: bool = True) -> int:
+    """Release every relation in the root scope — what library calls
+    made outside any :func:`cache_scope` cached for the plans they
+    returned. Call it after the terminal action; ``df`` is accepted and
+    ignored (older callers pass the result). Returns the count.
+
+    ``blocking`` defaults to True: an async unpersist lets block eviction
+    run concurrently with whatever the session does next — in a
+    many-query sweep that bleeds one query's cleanup into the next
+    query's measured window."""
+    return _ROOT.release(blocking=blocking)
 
 
 def global_row_number(
@@ -277,14 +329,13 @@ def global_row_number(
 
     ``order_cols`` must be a deterministic total order (pass tiebreak
     columns) or ranks within a tie are layout-dependent. Returns
-    ``(ranked, total_rows)``; ``ranked`` carries a pinned persisted
+    ``(ranked, total_rows)``; ``ranked`` reads a :func:`cache`-d
     relation (the range sampler must not run twice against a recomputed
-    input) — release with :func:`release_pinned` after the terminal
-    action, and :func:`carry_pins` across further transformations."""
+    input)."""
     spark = df.sparkSession
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    local = (
+    local = cache(
         df.repartitionByRange(num_partitions, *[c.asc() for c in cols])
         .sortWithinPartitions(*[c.asc() for c in cols])
         .withColumn("_grn_mid", F.monotonically_increasing_id())
@@ -292,7 +343,6 @@ def global_row_number(
         .withColumn(
             "_grn_lix", F.col("_grn_mid").bitwiseAND(F.lit((1 << 33) - 1))
         )
-        .persist()
     )
     counts = sorted(
         (r["_grn_pid"], r["n"])
@@ -314,4 +364,4 @@ def global_row_number(
         )
         .drop("_grn_mid", "_grn_pid", "_grn_lix", "_grn_off")
     )
-    return pin(ranked, local), acc
+    return ranked, acc

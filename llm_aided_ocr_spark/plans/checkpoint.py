@@ -111,103 +111,100 @@ class CheckpointStore:
         parquet instead of recomputing the increment's upstream plan, and
         history is never reprocessed on resume.
         """
-        spark = df.sparkSession
-        if mode == "overwrite":
-            if os.path.exists(self.stage_path(stage)):
-                shutil.rmtree(self.stage_path(stage))
-            if self.bucketed_keys:
-                spark.sql(f"DROP TABLE IF EXISTS {self.keys_table(stage)}")
-        if self.use_iceberg:
-            # DataFrameWriterV2 commit: one Iceberg snapshot per increment.
-            # The increment is persisted so the commit and the counter pass
-            # share one computation of the upstream plan.
-            table = self.iceberg_table(stage)
-            increment = df.persist()
-            commit_name = f"iceberg_{self.run_id}_{time.time_ns()}"
-            writer = increment.writeTo(table)
-            if mode == "overwrite" or not spark.catalog.tableExists(table):
-                writer.createOrReplace()
-            else:
-                writer.append()
-            inc_path = None
-        else:
-            inc_path = os.path.join(
-                self.stage_path(stage), f"inc_{self.run_id}_{time.time_ns()}"
-            )
-            df.write.mode("errorifexists").parquet(inc_path)
-            increment = spark.read.parquet(inc_path)
-            commit_name = os.path.basename(inc_path)
+        from llm_aided_ocr_spark.operators.util import cache, cache_scope
 
-        agg_cols = [F.count(F.lit(1)).alias("rows")]
-        if counted_col is not None:
-            agg_cols.append(
-                F.sum(F.length(F.col(counted_col))).cast("long").alias("payload_chars")
-            )
-        counters = (
-            increment.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(*agg_cols)
-            .collect()
-        )
-        inc_rows = int(sum(r["rows"] for r in counters))
-        prev_rows = 0
-        for r in self.lineage_records():
-            if r["stage"] != stage:
-                continue
-            if r.get("mode") == "overwrite":  # history was cleared then
-                prev_rows = 0
-            prev_rows += r.get("increment_rows", r.get("total_rows", 0))
-        if mode == "overwrite":  # this commit replaced all history
-            prev_rows = 0
-        record = {
-            "run_id": self.run_id,
-            "stage": stage,
-            "ts": time.time(),
-            "mode": mode,
-            "commit": commit_name,
-            "increment_rows": inc_rows,
-            "total_rows": prev_rows + inc_rows,
-            "partitions": [r.asDict() for r in counters],
-        }
-        os.makedirs(self._lineage_dir(), exist_ok=True)
-        log_path = os.path.join(self._lineage_dir(), "lineage.jsonl")
-        with open(log_path, "a", encoding="utf-8") as f:
-            f.write(json.dumps(record) + "\n")
-        if self.bucketed_keys:
+        with cache_scope() as scope:
+            spark = df.sparkSession
+            if mode == "overwrite":
+                if os.path.exists(self.stage_path(stage)):
+                    shutil.rmtree(self.stage_path(stage))
+                if self.bucketed_keys:
+                    spark.sql(f"DROP TABLE IF EXISTS {self.keys_table(stage)}")
             if self.use_iceberg:
-                # no _SUCCESS markers to heal from in iceberg mode —
-                # append this increment's keys directly (the increment is
-                # still persisted). Crash window between the Iceberg
-                # commit and this append = possible reprocessing on
-                # resume, not data loss; a production deployment should
-                # maintain the keys table in the SAME Iceberg transaction
-                # (or use storage-partitioned joins on the stage table).
-                if self.key_col in increment.columns:
-                    (
-                        increment.select(self.key_col)
-                        .write.mode("append")
-                        .bucketBy(self.n_buckets, self.key_col)
-                        .sortBy(self.key_col)
-                        .format("parquet")
-                        .saveAsTable(self.keys_table(stage))
-                    )
+                # DataFrameWriterV2 commit: one Iceberg snapshot per increment.
+                # The increment is persisted so the commit and the counter pass
+                # share one computation of the upstream plan.
+                table = self.iceberg_table(stage)
+                increment = cache(df)
+                commit_name = f"iceberg_{self.run_id}_{time.time_ns()}"
+                writer = increment.writeTo(table)
+                if mode == "overwrite" or not spark.catalog.tableExists(table):
+                    writer.createOrReplace()
+                else:
+                    writer.append()
+                inc_path = None
             else:
-                # keys lag the parquet commit by design (the increment's
-                # _SUCCESS is the source of truth); _sync_keys is the
-                # self-healing reconciliation that replays any committed
-                # increment whose keys never landed (crash window), so it
-                # is the ONLY writer of the keys table — called here and
-                # again defensively in remaining()
-                self._sync_keys(spark, stage)
-        if self.use_iceberg:
-            if return_committed:
-                increment.unpersist()
-            else:
-                # the caller keeps using the persisted increment — hand it
-                # the release handle instead of leaking until GC
-                from llm_aided_ocr_spark.operators.util import pin
+                inc_path = os.path.join(
+                    self.stage_path(stage), f"inc_{self.run_id}_{time.time_ns()}"
+                )
+                df.write.mode("errorifexists").parquet(inc_path)
+                increment = spark.read.parquet(inc_path)
+                commit_name = os.path.basename(inc_path)
 
-                pin(increment, increment)
-        return self.read(spark, stage) if return_committed else increment
+            agg_cols = [F.count(F.lit(1)).alias("rows")]
+            if counted_col is not None:
+                agg_cols.append(
+                    F.sum(F.length(F.col(counted_col))).cast("long").alias("payload_chars")
+                )
+            counters = (
+                increment.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(*agg_cols)
+                .collect()
+            )
+            inc_rows = int(sum(r["rows"] for r in counters))
+            prev_rows = 0
+            for r in self.lineage_records():
+                if r["stage"] != stage:
+                    continue
+                if r.get("mode") == "overwrite":  # history was cleared then
+                    prev_rows = 0
+                prev_rows += r.get("increment_rows", r.get("total_rows", 0))
+            if mode == "overwrite":  # this commit replaced all history
+                prev_rows = 0
+            record = {
+                "run_id": self.run_id,
+                "stage": stage,
+                "ts": time.time(),
+                "mode": mode,
+                "commit": commit_name,
+                "increment_rows": inc_rows,
+                "total_rows": prev_rows + inc_rows,
+                "partitions": [r.asDict() for r in counters],
+            }
+            os.makedirs(self._lineage_dir(), exist_ok=True)
+            log_path = os.path.join(self._lineage_dir(), "lineage.jsonl")
+            with open(log_path, "a", encoding="utf-8") as f:
+                f.write(json.dumps(record) + "\n")
+            if self.bucketed_keys:
+                if self.use_iceberg:
+                    # no _SUCCESS markers to heal from in iceberg mode —
+                    # append this increment's keys directly (the increment is
+                    # still persisted). Crash window between the Iceberg
+                    # commit and this append = possible reprocessing on
+                    # resume, not data loss; a production deployment should
+                    # maintain the keys table in the SAME Iceberg transaction
+                    # (or use storage-partitioned joins on the stage table).
+                    if self.key_col in increment.columns:
+                        (
+                            increment.select(self.key_col)
+                            .write.mode("append")
+                            .bucketBy(self.n_buckets, self.key_col)
+                            .sortBy(self.key_col)
+                            .format("parquet")
+                            .saveAsTable(self.keys_table(stage))
+                        )
+                else:
+                    # keys lag the parquet commit by design (the increment's
+                    # _SUCCESS is the source of truth); _sync_keys is the
+                    # self-healing reconciliation that replays any committed
+                    # increment whose keys never landed (crash window), so it
+                    # is the ONLY writer of the keys table — called here and
+                    # again defensively in remaining()
+                    self._sync_keys(spark, stage)
+            if self.use_iceberg and not return_committed:
+                # the caller keeps reading the persisted increment
+                scope.keep(increment)
+            return self.read(spark, stage) if return_committed else increment
 
     def _keys_marker(self, stage: str) -> str:
         # digest-suffixed for the same mangling-collision reason as

@@ -261,7 +261,6 @@ def run_pipeline(
             )
 
     df = pages_df
-    pinned: list[DataFrame] = []
     if cfg.check_if_valid_english:
         df = language_gate(df)
 
@@ -296,9 +295,12 @@ def run_pipeline(
         # that routed relation — the parquet source is scanned once to
         # populate the cache and both branches filter the cached copy
         # (MEMORY_AND_DISK: partitions spill to executor-local disk at
-        # 100 TB, which beats a second remote scan; the ContextCleaner
-        # releases the blocks when the plan is garbage-collected).
+        # 100 TB, which beats a second remote scan). The cache belongs to
+        # the caller's cache_scope — or the root scope, freed by
+        # release_pinned() after the terminal action.
         from pyspark import StorageLevel
+
+        from llm_aided_ocr_spark.operators.util import cache
 
         # The routing size is computed ONCE at cache build and stored as
         # an int column: both branch filters would otherwise re-run
@@ -316,11 +318,13 @@ def run_pipeline(
                 F.lit("").cast("binary") if use_html else F.lit(""),
             )
         )
-        routed = df.select(
-            "url", "warc_ts", "lang", source_col,
-            size.cast("bigint").alias("_ocr_route_sz"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pinned.append(routed)
+        routed = cache(
+            df.select(
+                "url", "warc_ts", "lang", source_col,
+                size.cast("bigint").alias("_ocr_route_sz"),
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
         sz = F.col("_ocr_route_sz")
         small = routed.filter(sz <= cfg.mega_doc_chars).drop("_ocr_route_sz")
         big = routed.filter(sz > cfg.mega_doc_chars).drop("_ocr_route_sz")
@@ -338,28 +342,4 @@ def run_pipeline(
         result = store.write(
             result, "corrected_docs", mode="append", counted_col="corrected_text"
         )
-    # explicit persist lifecycle: the auto strategy's routed cache is pinned
-    # on the RESULT so callers release it deterministically once their
-    # terminal action completes (release_pipeline_cache), instead of leaning
-    # on ContextCleaner GC — which in a long-lived session pins executor
-    # memory/disk ≈ pruned-corpus size until the plan object is collected.
-    result._ocr_spark_pinned = pinned  # type: ignore[attr-defined]
     return result
-
-
-def release_pipeline_cache(result: DataFrame, blocking: bool = True) -> int:
-    """Unpersist every relation :func:`run_pipeline` pinned for ``result``
-    (the auto strategy's routed corpus cache). Call AFTER the terminal
-    action (write/collect) on ``result`` — the cache exists precisely so the
-    two routing branches share one source scan during that action. Returns
-    the number of relations released. Safe to call on any DataFrame (no-op
-    when nothing is pinned) and idempotent.
-
-    The same contract covers every operator with an internal cache
-    (ngram/minhash/simhash pairs, embedding near-dup, fingerprint
-    matches): their results carry the pin, and
-    ``operators.util.release_pinned`` (this function's generic form)
-    releases them."""
-    from llm_aided_ocr_spark.operators.util import release_pinned
-
-    return release_pinned(result, blocking=blocking)

@@ -358,8 +358,11 @@ def test_dedup_clusters_random_vs_union_find(spark):
 
 
 def test_internal_caches_are_pinned_and_releasable(spark, corpus):
-    """Every operator with an internal .cache() pins it on its result so a
-    long-lived session can release the storage deterministically."""
+    """Every operator with an internal cache registers it with the cache
+    owner, so a long-lived session can release the storage
+    deterministically: the storage exists after the action, and
+    release_pinned frees all of it."""
+    from cache_storage import storage_snapshot
     from llm_aided_ocr_spark.operators.dedup import (
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
@@ -368,14 +371,15 @@ def test_internal_caches_are_pinned_and_releasable(spark, corpus):
     from llm_aided_ocr_spark.operators.util import release_pinned
 
     for op in (ngram_jaccard_pairs, minhash_dedup_pairs, simhash_near_dup_pairs):
+        release_pinned()
+        before = storage_snapshot(spark)
         out = op(corpus)
         out.count()
-        pinned = getattr(out, "_ocr_spark_pinned", [])
-        assert pinned, op.__name__
-        assert all(p.storageLevel.useMemory for p in pinned), op.__name__
-        assert release_pinned(out, blocking=True) >= 1, op.__name__
-        assert not any(p.storageLevel.useMemory for p in pinned), op.__name__
-        assert release_pinned(out) == 0  # idempotent
+        held = storage_snapshot(spark) - before
+        assert {kind for kind, _ in held} == {"rdd", "cache_entry"}, op.__name__
+        assert release_pinned(blocking=True) >= 1, op.__name__
+        assert not storage_snapshot(spark) & held, op.__name__
+        assert release_pinned() == 0  # idempotent
 
 
 def test_near_dedup_one_call(spark, corpus):

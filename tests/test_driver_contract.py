@@ -58,20 +58,25 @@ def _rowset(rows, cols):
 
 
 def test_queries_match_oracles(spark, entry_mod, duck):
+    from cache_storage import storage_snapshot
     from llm_aided_ocr_spark.operators.util import release_pinned
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert set(oracles) <= set(qs)
+    leaks = {}
     for name, sql in oracles.items():
+        before = storage_snapshot(spark)
         sdf = qs[name](spark, SF_DIR)
         spark_cols = sdf.columns
         spark_rows = [tuple(r) for r in sdf.collect()]
-        # follow each operator's documented cache lifecycle: release the
-        # pinned relations after the terminal action so a 61-query sweep
-        # does not accumulate executor storage (and so later storage-
-        # count tests see a quiet session, not ContextCleaner races)
+        # every cache a query acquires is released after the terminal
+        # action (and so a 154-query sweep does not accumulate executor
+        # storage)
         release_pinned(sdf, blocking=True)
+        leaked = storage_snapshot(spark) - before
+        if leaked:
+            leaks[name] = sorted(leaked)
         res = duck.execute(sql)
         duck_cols = [c[0] for c in res.description]
         duck_rows = res.fetchall()
@@ -80,14 +85,25 @@ def test_queries_match_oracles(spark, entry_mod, duck):
         assert _rowset(spark_rows, spark_cols) == _rowset(duck_rows, duck_cols), (
             f"{name}: values differ"
         )
+    assert leaks == {}, f"storage survived release_pinned: {sorted(leaks)}"
 
 
 def test_rows_only_queries_run(spark, entry_mod):
+    from cache_storage import storage_snapshot
+    from llm_aided_ocr_spark.operators.util import release_pinned
+
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    for name in set(qs) - set(oracles):
+    leaks = {}
+    for name in sorted(set(qs) - set(oracles)):
+        before = storage_snapshot(spark)
         df = qs[name](spark, SF_DIR)
         assert df.count() >= 0, name
+        release_pinned(df, blocking=True)
+        leaked = storage_snapshot(spark) - before
+        if leaked:
+            leaks[name] = sorted(leaked)
+    assert leaks == {}, f"storage survived release_pinned: {sorted(leaks)}"
 
 
 def test_html_extract_contract_robust_to_markup_and_whitespace(duck):

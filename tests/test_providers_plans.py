@@ -496,32 +496,33 @@ def test_auto_strategy_routes_on_cached_size_column(spark):
 
 
 def test_auto_strategy_cache_released_after_action(spark):
-    """run_pipeline(auto) pins the routed corpus cache on the result;
-    release_pipeline_cache must unpersist it after the terminal action so
-    a long-lived session does not accumulate corpus-sized storage."""
+    """run_pipeline(auto) registers its routed corpus cache with the
+    cache owner; release_pinned must unpersist it after the terminal
+    action so a long-lived session does not accumulate corpus-sized
+    storage."""
     import __spark_entry__ as e
+    from cache_storage import storage_snapshot
     from llm_aided_ocr_spark.config import PipelineConfig
-    from llm_aided_ocr_spark.plans.pipeline import (
-        release_pipeline_cache,
-        run_pipeline,
-    )
+    from llm_aided_ocr_spark.operators.util import release_pinned
+    from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    def n_cached() -> int:
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
+    release_pinned()
     spark.catalog.clearCache()
-    base = n_cached()
+    before = storage_snapshot(spark)
     pages = e._docs_as_pages(spark, "/root/testdata/sf0.001")
     cfg = PipelineConfig(provider="identity")
     result = run_pipeline(pages, cfg, strategy="auto")
     assert result.count() > 0
-    assert n_cached() > base, "auto strategy should have materialized its cache"
-    released = release_pipeline_cache(result, blocking=True)
-    assert released == 1
-    assert n_cached() == base, "routed cache must be gone after release"
-    # idempotent no-op on second call and on unpinned DataFrames
-    assert release_pipeline_cache(result) == 0
-    assert release_pipeline_cache(pages) == 0
+    held = storage_snapshot(spark) - before
+    assert {kind for kind, _ in held} == {"rdd", "cache_entry"}, (
+        "auto strategy should have materialized its cache"
+    )
+    assert release_pinned(result, blocking=True) == 1
+    assert not storage_snapshot(spark) & held, (
+        "routed cache must be gone after release"
+    )
+    # idempotent no-op on a second call
+    assert release_pinned(result) == 0
 
 
 def test_ccnet_cut_windows_the_aggregated_relation(spark):

@@ -259,7 +259,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from llm_aided_ocr_spark.operators.util import release_pinned
-    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
 
     which = sys.argv[1] if len(sys.argv) > 1 else "both"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
@@ -287,8 +286,6 @@ def main() -> None:
                 bench._noop_sink(df)
                 dt = time.time() - t0
                 release_pinned(df)
-                if name == "curate":
-                    release_pipeline_cache(df)
                 rec = report.setdefault(name, {})
                 rec[f"sec_{tag}"] = round(dt, 2)
                 rec[f"mb_per_sec_{tag}"] = round(mb / dt, 1)

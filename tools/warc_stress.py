@@ -24,7 +24,6 @@ def main() -> None:
     rows_list = [int(a) for a in sys.argv[1:]] or [320_000, 640_000]
     spark = bench._get_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     from llm_aided_ocr_spark.operators.util import release_pinned
-    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
 
     report = {}
     try:
@@ -47,8 +46,6 @@ def main() -> None:
                 rec[f"{name}_sec"] = round(time.time() - t0, 2)
                 rec[f"{name}_mb_per_sec"] = round(mb / (time.time() - t0), 1)
                 release_pinned(df)
-                if name == "warc_curate":
-                    release_pipeline_cache(df)
                 print(f"[warc-stress] r{rows} {name}: {rec[f'{name}_sec']}s",
                       file=sys.stderr, flush=True)
             report[str(rows)] = rec
